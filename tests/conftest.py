@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 
 import pytest
 
@@ -15,3 +16,21 @@ def spark():
                   shuffle_partitions=8, driver_memory="8g")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(action)`` runs ``action()`` under a fresh job group
+    and returns how many Spark jobs it launched (statusTracker)."""
+    sc = spark.sparkContext
+
+    def run(action):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -3,9 +3,11 @@ projections, multi-epoch tables, and uuid expansion."""
 
 import os
 
+import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 
+from tokcodec.encode import BUCKET_COL
 from tokcodec.io_tables import read_encoded, read_encoded_direct, write_encoded
 
 SCHEMA = T.StructType([
@@ -28,20 +30,40 @@ def _sorted_rows(df):
     )
 
 
-def test_direct_equals_grouped(spark, tmp_path):
+def _table(spark, path, n_buckets):
+    """A 2-run table over ``n_buckets`` buckets, or (n_buckets=0) a
+    table whose only write was empty: no committed bucket at all."""
+    if n_buckets == 0:
+        write_encoded(_mk(spark, 0, 0), path, n_buckets=4, run_id="e")
+        return 0
+    write_encoded(_mk(spark, 0, 200), path, n_buckets=n_buckets,
+                  run_id="r1", epoch=0, chunk_max_rows=32)
+    write_encoded(_mk(spark, 200, 300), path, n_buckets=n_buckets,
+                  run_id="r2", epoch=1, chunk_max_rows=32)
+    return 300
+
+
+@pytest.mark.parametrize("shape", ["one", "P", "4P+1", "empty"])
+def test_direct_equals_grouped(spark, spark_jobs, tmp_path, shape):
+    """Every committed bucket is decoded by exactly one task, whether
+    there are fewer buckets than cores, as many, many more, or none."""
+    p = spark.sparkContext.defaultParallelism
+    n_buckets = {"one": 1, "P": p, "4P+1": 4 * p + 1, "empty": 0}[shape]
     path = os.path.join(str(tmp_path), "t")
-    write_encoded(_mk(spark, 0, 200), path, n_buckets=4, run_id="r1",
-                  epoch=0, chunk_max_rows=32)
-    write_encoded(_mk(spark, 200, 300), path, n_buckets=4, run_id="r2",
-                  epoch=1, chunk_max_rows=32)
-    a = _sorted_rows(read_encoded(spark, path))
+    n_rows = _table(spark, path, n_buckets)
+    # the bucket column forces the grouped (groupBy(bucket)) plan
+    a = _sorted_rows(read_encoded(spark, path, with_bucket_column=True)
+                     .drop(BUCKET_COL))
     b = _sorted_rows(read_encoded_direct(spark, path))
-    assert a == b and len(a) == 300
-    # no shuffle exchange in the direct plan (only the tiny bucket-id
-    # repartition feeds the readers)
-    plan = read_encoded_direct(spark, path)._jdf.queryExecution() \
-        .executedPlan().toString()
+    assert a == b and len(a) == n_rows
+    assert len({r[0] for r in b}) == n_rows
+    # the bucket tasks come from spark.range: no exchange of any kind,
+    # and the read is ONE Spark job
+    direct = read_encoded_direct(spark, path)
+    plan = direct._jdf.queryExecution().executedPlan().toString()
     assert "Scan parquet" not in plan  # payloads never enter a Spark scan
+    assert "Exchange" not in plan
+    assert spark_jobs(direct.collect) == 1
 
 
 def test_direct_projection(spark, tmp_path):

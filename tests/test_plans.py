@@ -140,6 +140,30 @@ def test_zorder_multirange_plan_broadcasts(spark, tmp_path):
     assert g.count() == 8 * 8
 
 
+def test_join_encoded_one_job_no_exchange(spark, spark_jobs, tmp_path):
+    """A co-bucketed join decodes and joins both sides inside the
+    bucket tasks: its plan has no exchange at all and collecting it
+    is ONE Spark job."""
+    from tokcodec.io_tables import write_encoded
+    from tokcodec.joins import join_encoded
+
+    lp, rp = str(tmp_path / "jl"), str(tmp_path / "jr")
+    write_encoded(spark.range(300).select(
+        F.format_string("d%d", "id").alias("doc_id"),
+        F.col("id").cast("int").alias("n")), lp, n_buckets=16,
+        salt_cols=("doc_id",))
+    write_encoded(spark.range(100, 400).select(
+        F.format_string("d%d", "id").alias("doc_id"),
+        (F.col("id") * 2).alias("m")), rp, n_buckets=16,
+        salt_cols=("doc_id",))
+    j = join_encoded(spark, lp, rp, on="doc_id")
+    assert "Exchange" not in _plan(j)
+    rows = []
+    assert spark_jobs(lambda: rows.extend(j.collect())) == 1
+    assert len(rows) == 200
+    assert all(r.m == 2 * r.n for r in rows)
+
+
 def test_media_decode_plan_no_extra_shuffle(spark):
     """media pipeline: synth -> encode -> decode -> groupBy(kind).
     Exactly the decode shuffle + the aggregation exchange — the

@@ -38,6 +38,7 @@ import os
 import posixpath
 import re
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -93,8 +94,6 @@ def _local_fs_path(spark: SparkSession, path: str) -> str | None:
     the Hadoop API unchanged."""
     if re.match(r"^[A-Za-z][A-Za-z0-9+.\-]*:", path):
         if path.startswith("file:"):
-            from urllib.parse import urlparse
-
             return urlparse(path).path or None
         return None
     sc = spark.sparkContext
@@ -186,9 +185,13 @@ def _bucket_ranges(buckets: list[int]) -> list[list[int]]:
 def _task_fs(root: str):
     """pyarrow filesystem for the blocks root — executor-side (the
     Hadoop JVM gateway isn't reachable from Python workers); local
-    paths and fsspec-able URIs (s3://, hdfs://) both resolve."""
+    paths, ``file:`` URIs in any slash form and fsspec-able URIs
+    (s3://, hdfs://) all resolve. %XX stays literal, as in Hadoop's
+    Path, so Spark-side and pyarrow-side IO sites agree."""
     from pyarrow import fs as pafs
 
+    if root.startswith("file:"):
+        return pafs.LocalFileSystem(), urlparse(root).path
     if "://" in root:
         f, p = pafs.FileSystem.from_uri(root)
         return f, p
@@ -1516,7 +1519,7 @@ def read_encoded(
     # Shuffle-free routing: the groupBy(bucket) plan ships every block
     # payload byte through an exchange and caps decode parallelism at
     # the bucket count of one shuffle round; the direct plan opens each
-    # bucket's files in its own task and moves no block data at all
+    # bucket's files inside a bucket task and moves no block data at all
     # (guide §2.4: remove shuffles outright). Route every read the
     # direct planner supports through it — the grouped plan remains for
     # the shapes that need the blocks DataFrame itself (chunk-subset
@@ -2038,6 +2041,28 @@ def _filter_survivors(blocks: DataFrame, schema: T.StructType,
     return zones, nf["residual"]
 
 
+def _bucket_tasks(spark: SparkSession, buckets_of, fn,
+                  schema) -> DataFrame:
+    """Task ``i`` of ``n`` yields ``fn(buckets_of()[i::n])``'s record
+    batches; ``buckets_of`` returns the sorted bucket list from a
+    broadcast the caller already ships (the driver sizes ``n`` by it).
+    The source is ``spark.range``: no shuffle, ONE job of ``n`` tasks.
+    ``n`` is one task per core, not 2x: every Python task pays
+    210-370 ms of pyspark's own setup (``importlib.invalidate_caches()``
+    re-reading pyspark.zip per zipimporter; Python 3.11, 4-core host)
+    before the UDF runs, even in a reused worker, and again for a
+    chained mapInArrow — a second wave doubles that fixed cost."""
+    n = max(1, min(len(buckets_of()),
+                   spark.sparkContext.defaultParallelism))
+
+    def run(batches):
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                yield from fn(buckets_of()[i::n])
+
+    return spark.range(n, numPartitions=n).mapInArrow(run, schema)
+
+
 def read_encoded_direct(
     spark: SparkSession, path: str, columns: list[str] | None = None,
     verify_checksums: bool = False,
@@ -2052,18 +2077,11 @@ def read_encoded_direct(
     as_of_tag: str | None = None,
     or_filter: list[tuple] | None = None,
 ) -> DataFrame:
-    """Shuffle-free decode: one task per committed bucket opens that
-    bucket's block files directly with pyarrow.
-
-    `read_encoded` colocates a bucket's components with
-    groupBy(bucket), which shuffles every payload byte once; this path
-    moves no block data at all — only the decoded output. It wins when
-    the shuffle is the bottleneck (network-bound clusters) and files
-    are bucket-grained, which they are at production bucket sizes
-    (one encode task per bucket). At sandbox scale several tiny
-    buckets can share a writer task's file, so the per-bucket reads
-    re-decode shared files and the grouped path measures faster
-    locally — pick per deployment.
+    """Shuffle-free decode — the plan `read_encoded` routes every read
+    to unless it needs a chunk subset, sample, bucket restriction or
+    bucket column. One task per core (_bucket_tasks: one job, one
+    wave) opens its buckets' block files directly with pyarrow; only
+    decoded rows leave the task.
 
     The bucket->files map is planned from the committed runs' file
     manifests (exact per-file bucket ranges recorded at write time):
@@ -2211,71 +2229,51 @@ def read_encoded_direct(
     # bucket->files dict driver-side would be O(buckets x files) and at
     # production scale (~400k buckets) a multi-hundred-MB broadcast
     # (round-3 verdict #6). Each task expands only ITS buckets' file
-    # lists from the ranges (one bisect pass per batch).
-    file_rows = _direct_file_rows(files, scan_cols, blocks_p)
+    # lists from the ranges (one bisect pass per task).
+    fs, blocks_root = _task_fs(blocks_p)
+    file_rows = _direct_file_rows(files, scan_cols, blocks_root)
     files_b = spark.sparkContext.broadcast(file_rows)
 
-    def fn(batches):
-        import bisect as _bisect
-
+    def fn(bks):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            bks = sorted(set(batch.column("bucket").to_pylist()))
-            # Per-bucket file lists. A file belongs to exactly ONE
-            # run, so run accept/reject is decided here per
-            # (file, bucket) from the plan — the losing side of a
-            # re-encoded bucket is never opened, and no row-level
-            # run_id filter runs. (A once-per-file read + zero-copy
-            # per-bucket slice was prototyped for the shared-file
-            # case: pure-pyarrow it is 3.7x cheaper, but Spark-level
-            # A/B at sf0.1 measured it NEUTRAL-to-worse — 1.27-1.60 s
-            # vs 1.13-1.17 s — because repartitionByRange adds a
-            # ~0.3 s sampling job, group-hashing adds collision skew,
-            # and the OS page cache already makes the re-read cheap;
-            # the per-bucket open stays, measured not guessed. At
-            # production bucket sizes files are bucket-grained and
-            # the question vanishes.)
-            local: dict[int, list[str]] = {}
-            for lo, hi, fp, colname, rid in files_b.value:
-                i = _bisect.bisect_left(bks, lo)
-                j = _bisect.bisect_right(bks, hi)
-                for bkt in bks[i:j]:
-                    if rid in acc_b.value.get(bkt, ()):
-                        local.setdefault(bkt, []).append(fp)
-            for bucket in batch.column("bucket").to_pylist():
-                flist = local.get(bucket, ())
-                if not flist:
+        # Per-bucket file lists. A file belongs to exactly ONE run, so
+        # run accept/reject is decided per (file, bucket) from the plan
+        # — the losing side of a re-encoded bucket is never opened. A
+        # file shared by several buckets is opened once per bucket: a
+        # once-per-file read fed contiguous buckets by repartitionByRange
+        # A/B'd neutral-to-worse at sf0.1 (its sampling job costs
+        # ~0.3 s; the page cache makes the re-read cheap).
+        local: dict[int, list[str]] = {}
+        for lo, hi, fp, colname, rid in files_b.value:
+            i = bisect.bisect_left(bks, lo)
+            j = bisect.bisect_right(bks, hi)
+            for bkt in bks[i:j]:
+                if rid in acc_b.value.get(bkt, ()):
+                    local.setdefault(bkt, []).append(fp)
+        for bucket in bks:
+            flist = local.get(bucket, ())
+            if not flist:
+                continue
+            parts = []
+            for fp in flist:  # bounded: files per bucket
+                # the bucket filter prunes row groups of shared files
+                t = pq.read_table(fp, filesystem=fs,
+                                  filters=[("bucket", "=", bucket)])
+                if t.num_rows:
+                    parts.append(t)
+            if not parts:
+                continue
+            tbl = pa.concat_tables(parts)
+            if prune_specs:
+                tbl = _prune_block_table(
+                    tbl, prune_specs, encryption_key=encryption_key)
+                if tbl.num_rows == 0:
                     continue
-                parts = []
-                for fp in flist:  # bounded: files per bucket
-                    # the bucket filter prunes row groups of
-                    # multi-bucket files
-                    t = pq.read_table(fp, filters=[
-                        ("bucket", "=", bucket),
-                    ])
-                    if t.num_rows:
-                        parts.append(t)
-                if not parts:
-                    continue
-                tbl = pa.concat_tables(parts)
-                if prune_specs:
-                    tbl = _prune_block_table(
-                        tbl, prune_specs, encryption_key=encryption_key)
-                    if tbl.num_rows == 0:
-                        continue
-                out = inner((bucket,), tbl)
-                yield from out.to_batches()
+            yield from inner((bucket,), tbl).to_batches()
 
-    buckets_df = spark.createDataFrame(
-        [(b,) for b in sorted(accepted)], "bucket int"
-    )
-    n_tasks = max(1, min(len(accepted) or 1,
-                         spark.sparkContext.defaultParallelism * 2))
-    out = buckets_df.repartition(n_tasks, F.col("bucket")).mapInArrow(
-        fn, schema=schema
-    )
+    out = _bucket_tasks(spark, lambda: sorted(acc_b.value), fn, schema)
     for nf in nfs:
         out = out.filter(nf["residual"])
     out = _expand_uuid_cols(out, manifest.get("uuid_columns", []))

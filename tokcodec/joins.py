@@ -7,12 +7,12 @@ SAME bucket count are therefore co-partitioned on the salt: every
 pair of rows that can satisfy an equi-join whose keys cover the salt
 lives in the same bucket id. ``join_encoded`` exploits that the way
 Spark/Hive bucketed joins and Iceberg's bucket-partition joins do —
-one task per bucket, both sides' blocks decoded executor-side from
+bucket by bucket, both sides' blocks decoded executor-side from
 the driver's explicit file plan, joined locally with Arrow's hash
-join — with NO shuffle of table data. The only thing that moves is
-the bucket-id list; at 10^12 rows the exchange a shuffled join would
-need (the whole table, twice) simply never happens, and task memory
-is bounded by bucket size (``n_buckets`` at write controls it).
+join — with NO shuffle at all (io_tables._bucket_tasks). At 10^12
+rows the exchange a shuffled join would need (the whole table,
+twice) simply never happens, and task memory is bounded by bucket
+size (``n_buckets`` at write controls it).
 
 The reference's Carpet has no join machinery at all — joins happen in
 whatever engine consumes the parquet (SURVEY §2.2 relational
@@ -37,6 +37,7 @@ from tokcodec.io_tables import (
     _active_deletes,
     _apply_deletes,
     _as_of_schema,
+    _bucket_tasks,
     _check_encryption_key,
     _direct_file_rows,
     _evolution_fill_columns,
@@ -45,6 +46,7 @@ from tokcodec.io_tables import (
     _paths,
     _resolve_as_of,
     _run_files,
+    _task_fs,
 )
 from tokcodec.schema import manifest_schema
 
@@ -110,13 +112,15 @@ def _plan_side(spark: SparkSession, path: str, on: list[str],
     _check_encryption_key(manifest, decode_names, encryption_key)
     inner = make_decode_fn(schema, fill_from=fill_from,
                            encryption_key=encryption_key)
+    fs, blocks_root = _task_fs(blocks_p)
     return {
         "manifest": manifest,
         "schema": schema,
         "want": want,
         "deletes": dels,
         "accepted": accepted,
-        "file_rows": _direct_file_rows(files, scan_cols, blocks_p),
+        "file_rows": _direct_file_rows(files, scan_cols, blocks_root),
+        "fs": fs,
         "decode": inner,
     }
 
@@ -132,7 +136,7 @@ def _salt_of(manifest: dict, path: str) -> list[str]:
     return salt
 
 
-def _decode_bucket_arrow(bucket: int, accepted, decode, fr_b):
+def _decode_bucket_arrow(bucket: int, accepted, decode, fr_b, fs):
     """Executor-side: decode one side's bucket from its file plan.
     Returns a pa.Table in the side's decode schema, or None when the
     bucket has no files on this side."""
@@ -145,7 +149,8 @@ def _decode_bucket_arrow(bucket: int, accepted, decode, fr_b):
     parts = []
     for lo, hi, fp, _col, rid in fr_b:
         if lo <= bucket <= hi and rid in runs:
-            t = pq.read_table(fp, filters=[("bucket", "=", bucket)])
+            t = pq.read_table(fp, filesystem=fs,
+                              filters=[("bucket", "=", bucket)])
             if t.num_rows:
                 parts.append(t)
     if not parts:
@@ -265,9 +270,10 @@ def join_encoded(
     lfr_b = spark.sparkContext.broadcast(lp["file_rows"])
     rfr_b = spark.sparkContext.broadcast(rp["file_rows"])
     l_decode, r_decode = lp["decode"], rp["decode"]
+    l_fs, r_fs = lp["fs"], rp["fs"]
     r_schema_json = rp["schema"].json()
 
-    def fn(batches):
+    def fn(buckets):
         import json as _json
 
         import numpy as np
@@ -275,58 +281,53 @@ def join_encoded(
         from pyspark.sql.types import StructType as _St
 
         r_spark_schema = _St.fromJson(_json.loads(r_schema_json))
-        for batch in batches:
-            for bucket in batch.column("bucket").to_pylist():
-                lt = _decode_bucket_arrow(bucket, lacc_b.value,
-                                          l_decode, lfr_b.value)
-                if lt is None or lt.num_rows == 0:
+        for bucket in buckets:
+            lt = _decode_bucket_arrow(bucket, lacc_b.value,
+                                      l_decode, lfr_b.value, l_fs)
+            if lt is None or lt.num_rows == 0:
+                continue
+            rt = _decode_bucket_arrow(bucket, racc_b.value,
+                                      r_decode, rfr_b.value, r_fs)
+            if rt is None:
+                if how == "inner" or how == "left_semi":
                     continue
-                rt = _decode_bucket_arrow(bucket, racc_b.value,
-                                          r_decode, rfr_b.value)
-                if rt is None:
-                    if how == "inner" or how == "left_semi":
-                        continue
-                    rt = lt.select(on).slice(0, 0)  # keys only, empty
-                    for name in r_payload:
-                        f = next(f for f in r_spark_schema.fields
-                                 if f.name == name)
-                        rt = rt.append_column(
-                            name, pa.nulls(0, _arrow_type(f.dataType)))
-                # hash-join on (keys, row index); payloads gathered by
-                # take afterwards (Acero can't carry nested payloads)
-                lk = lt.select(on).append_column(
-                    "__lidx", pa.array(np.arange(lt.num_rows),
-                                       pa.int64()))
-                rk = rt.select(on).append_column(
-                    "__ridx", pa.array(np.arange(rt.num_rows),
-                                       pa.int64()))
-                j = lk.join(rk, keys=on, join_type=acero_how)
-                if j.num_rows == 0:
-                    continue
-                cols = []
-                ltaken = lt.take(j.column("__lidx"))
-                for name in l_names:
-                    cols.append(ltaken.column(name))
-                if not semi:
-                    rtaken = rt.select(r_payload).take(
-                        j.column("__ridx")) if r_payload else None
-                    for name in r_payload:
-                        cols.append(rtaken.column(name))
-                out = pa.table(
-                    dict(zip(l_names + ([] if semi else r_payload),
-                             cols)))
-                yield from out.to_batches()
+                rt = lt.select(on).slice(0, 0)  # keys only, empty
+                for name in r_payload:
+                    f = next(f for f in r_spark_schema.fields
+                             if f.name == name)
+                    rt = rt.append_column(
+                        name, pa.nulls(0, _arrow_type(f.dataType)))
+            # hash-join on (keys, row index); payloads gathered by
+            # take afterwards (Acero can't carry nested payloads)
+            lk = lt.select(on).append_column(
+                "__lidx", pa.array(np.arange(lt.num_rows),
+                                   pa.int64()))
+            rk = rt.select(on).append_column(
+                "__ridx", pa.array(np.arange(rt.num_rows),
+                                   pa.int64()))
+            j = lk.join(rk, keys=on, join_type=acero_how)
+            if j.num_rows == 0:
+                continue
+            cols = []
+            ltaken = lt.take(j.column("__lidx"))
+            for name in l_names:
+                cols.append(ltaken.column(name))
+            if not semi:
+                rtaken = rt.select(r_payload).take(
+                    j.column("__ridx")) if r_payload else None
+                for name in r_payload:
+                    cols.append(rtaken.column(name))
+            out = pa.table(
+                dict(zip(l_names + ([] if semi else r_payload),
+                         cols)))
+            yield from out.to_batches()
 
-    if how == "inner" or how == "left_semi":
-        buckets = sorted(set(lp["accepted"]) & set(rp["accepted"]))
-    else:
-        buckets = sorted(lp["accepted"])
-    buckets_df = spark.createDataFrame([(b,) for b in buckets],
-                                       "bucket int")
-    n_tasks = max(1, min(len(buckets) or 1,
-                         spark.sparkContext.defaultParallelism * 2))
-    out = buckets_df.repartition(n_tasks, F.col("bucket")).mapInArrow(
-        fn, schema=out_schema)
+    def buckets_of():
+        if how == "inner" or how == "left_semi":
+            return sorted(set(lacc_b.value) & set(racc_b.value))
+        return sorted(lacc_b.value)
+
+    out = _bucket_tasks(spark, buckets_of, fn, out_schema)
 
     uuid_cols = sorted(
         (set(lman.get("uuid_columns", []))
